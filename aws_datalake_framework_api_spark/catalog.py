@@ -8,11 +8,14 @@ implemented ONCE, parameterized by entity type:
 
 - ``create/read/update/delete`` per entity table (the reference's
   stub bodies ``# API logic here``, ``lambda_function.py:61-64``,
-  given real semantics);
+  given real semantics).  Each single-id verb is the one-id case of
+  its batch form (``create_many``, ``update_where``,
+  ``delete_where``), so every mutating verb has one write path;
 - UPDATE is conditional — only-if-exists, like the reference's
   DynamoDB ``ConditionExpression="attribute_exists(aws_request_id)"``
   (``lambda_function.py:39``); updating a missing id is a no-op that
-  reports ``matched=0``, never an upsert;
+  reports ``matched=0``, never an upsert.  DELETE of a missing id is
+  likewise a no-op that commits nothing;
 - every call appends an audit row (``insert_event_to_dynamoDb``,
   ``lambda_function.py:6-54`` — the ONLY implemented data operation
   in the reference), including reads (:86);
@@ -22,47 +25,45 @@ implemented ONCE, parameterized by entity type:
   reserved word the reference's UpdateExpression would crash on —
   is a plain string column here.
 
-Storage: parquet tables under a warehouse directory, one directory
-per entity type (the reference provisions one S3 bucket per source
-system, ``cft/sourceSystem.yaml:20-27``; a Spark warehouse uses one
-PATH per table and partitions within).  Five backends behind one
-seam, chosen by probe at construction:
+Storage: one table per entity type under a warehouse directory (the
+reference provisions one S3 bucket per source system,
+``cft/sourceSystem.yaml:20-27``; a Spark warehouse uses one PATH per
+table and partitions within), in one of three table formats chosen by
+``Catalog.backend``.  Each format is a small object with the same five
+calls — ``exists``, ``read``, ``overwrite``, ``append`` and ``patch``
+(the A2 keyed status update) — so the catalog never branches on the
+format:
 
-- ``delta``: real Delta Lake when the package + jar are present;
-- ``deltalog`` (explicit opt-in): the same on-disk Delta table format
-  via the dependency-free protocol implementation in
-  :mod:`.sources.delta` — append/overwrite commits on the public
-  ``_delta_log`` layout, interoperable with delta-spark readers;
-- ``iceberg`` (explicit opt-in): Iceberg v2 tables via
-  :mod:`.sources.iceberg` — snapshot commits on the public metadata/
-  manifest layout; the A2 point update runs as a merge-on-read
-  position-delete + append in one snapshot (``upsert_iceberg``);
-- ``txlog`` (default here): the file-backed transaction log in
+- ``txlog`` (default): the file-backed transaction log in
   :mod:`..txlog` — immutable parquet data dirs + manifest commits
   published by atomic hard-link, snapshot-isolated readers, history/
-  time travel (VERDICT r3: the plain directory swap proved only a
-  fallback; this is an ACID-ish commit protocol with Delta's shape);
-- ``parquet``: the legacy read-modify-write directory swap, kept as
-  the explicit minimal mode.
+  time travel; the A2 patch is a merge-on-read tombstone + append;
+- ``deltalog``: the open Delta table format via the dependency-free
+  protocol implementation in :mod:`.sources.delta` — commits on the
+  public ``_delta_log`` layout, interoperable with delta-spark
+  readers; the A2 patch is a copy-on-write UPDATE of the hit files;
+- ``iceberg``: Iceberg v2 tables via :mod:`.sources.iceberg` —
+  snapshot commits on the public metadata/manifest layout; the A2
+  patch is a position-delete + append in one snapshot.
 
 Every audit record carries ``catalog_backend`` so correctness rows
-show WHICH path actually ran.
+show WHICH format actually served the call.
 
 Catalog tables are ENTITY metadata — hundreds to thousands of rows at
 any real deployment (they scale with registered systems, not with
-data volume), so single-directory parquet rewrite is the right cost
-model; the 100 TB concerns live in the lake tables the catalog
-points at.
+data volume), so a full-table rewrite per entity mutation is the
+right cost model; the 100 TB concerns live in the lake tables the
+catalog points at.  The audit table is the unbounded one, which is
+why it only ever takes appends and keyed patches.
 """
 
 from __future__ import annotations
 
 import os
-import shutil
 import uuid
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     LongType,
@@ -75,59 +76,6 @@ from pyspark.sql.types import (
 from .txlog import TxLogTable
 
 ENTITY_TYPES = ("source_system", "target_system", "data_asset")
-
-# ------------------------------------------------------------------ delta probe
-
-_DELTA_PROBE: dict[tuple[str, int], bool] = {}  # session key -> probe result
-
-
-def _session_key(spark: SparkSession) -> tuple[str, int]:
-    """Stable per-SparkContext memo key.  ``id(spark)`` is unsafe: a
-    garbage-collected session's id can be REUSED by a new session,
-    silently inheriting the stale memo entry (ADVICE r2).
-    applicationId + startTime survive the Python wrapper's lifetime
-    and never collide across contexts."""
-    sc = spark.sparkContext
-    return (sc.applicationId, sc.startTime)
-
-
-def delta_available(spark: SparkSession) -> bool:
-    """True iff this session can actually run Delta Lake: the
-    ``delta-spark`` Python package imports AND the io.delta jar is on
-    the JVM classpath AND a smoke write round-trips.  Probed once per
-    session; never triggers package/jar downloads.
-
-    The driver's north star names Spark SQL + Delta/Iceberg
-    connectors; in this container the probe FAILS (no ``delta`` module,
-    no io.delta jar under pyspark/jars — checked 2026-08-13), so the
-    catalog uses the :mod:`..txlog` transaction-log format — the same
-    immutable-data + atomic-commit-record protocol shape, file-backed.
-    When the probe passes, A2/A8-style mutations run as real
-    ``MERGE WHEN MATCHED`` / ``DELETE`` on Delta tables instead."""
-    key = _session_key(spark)
-    if key in _DELTA_PROBE:
-        return _DELTA_PROBE[key]
-    ok = False
-    d = None
-    try:
-        from delta.tables import DeltaTable  # noqa: F401
-
-        # jar present? (Class.forName raises through py4j if absent)
-        spark._jvm.java.lang.Class.forName("io.delta.tables.DeltaTable")  # noqa: SLF001
-        import tempfile as _tf
-
-        d = _tf.mkdtemp(prefix="delta_probe_")
-        spark.range(1).write.format("delta").mode("overwrite").save(d)
-        ok = spark.read.format("delta").load(d).count() == 1
-    except Exception:  # noqa: BLE001 — any failure means "no delta here"
-        ok = False
-    finally:
-        # always remove the probe dir, even when the smoke write died
-        # halfway through (ADVICE r2: the failure path leaked it)
-        if d is not None:
-            shutil.rmtree(d, ignore_errors=True)
-    _DELTA_PROBE[key] = ok
-    return ok
 
 
 def _local_df(spark: SparkSession, rows: list, schema: StructType) -> DataFrame:
@@ -146,6 +94,125 @@ def _local_df(spark: SparkSession, rows: list, schema: StructType) -> DataFrame:
     if isinstance(rows[0], dict):
         pdf = pdf.reindex(columns=cols)
     return spark.createDataFrame(pdf, schema)
+
+
+def _assign(df: DataFrame, cond: Column, assignments: dict) -> DataFrame:
+    """``df`` with ``assignments`` (column → literal) applied to the
+    rows where ``cond`` holds; other rows pass through unchanged."""
+    for col, val in assignments.items():
+        df = df.withColumn(col, F.when(cond, F.lit(val)).otherwise(F.col(col)))
+    return df
+
+
+# ------------------------------------------------------------------ formats
+#
+# The connector modules are imported inside the methods: importing
+# them registers their benchmark queries, and the registry's order must
+# not depend on whether the catalog was imported first.
+
+
+class _TxLog:
+    """:class:`..txlog.TxLogTable` behind the catalog's storage calls."""
+
+    def __init__(self, spark: SparkSession, path: str) -> None:
+        self.table = TxLogTable(spark, path)
+
+    def exists(self) -> bool:
+        return self.table.exists()
+
+    def read(self, schema: StructType) -> DataFrame:
+        return self.table.read(schema)  # empty frame when no table
+
+    def overwrite(self, df: DataFrame, op: str) -> None:
+        # the commit is labelled with the originating verb, so
+        # ``history()`` is an honest audit of the API calls
+        self.table.overwrite(df, op=op)
+
+    def append(self, df: DataFrame) -> None:
+        self.table.append(df)
+
+    def patch(self, rows: DataFrame, key: str, cond: Column, assignments: dict) -> None:
+        # merge-on-read in ONE commit: tombstone the key in existing
+        # dirs + append its patched rows; no data dir is rewritten
+        self.table.upsert_keys(_assign(rows, cond, assignments), key, op="update")
+
+
+class _OpenFormat:
+    """Shared write rule of the two open formats: the first commit
+    must be ``error`` mode so it carries the table's schema/protocol;
+    later commits overwrite or append on top.  Rewriting from a plan
+    that reads this same table is safe — data files are immutable."""
+
+    def __init__(self, spark: SparkSession, path: str) -> None:
+        self.spark, self.path = spark, path
+
+    def read(self, schema: StructType) -> DataFrame:
+        if not self.exists():
+            return self.spark.createDataFrame([], schema)
+        return self._read()
+
+    def overwrite(self, df: DataFrame, op: str) -> None:
+        self._write(df.coalesce(1), "overwrite" if self.exists() else "error")
+
+    def append(self, df: DataFrame) -> None:
+        self._write(df.coalesce(1), "append" if self.exists() else "error")
+
+
+class _DeltaLog(_OpenFormat):
+    """The open Delta format via :mod:`.sources.delta`."""
+
+    def exists(self) -> bool:
+        return os.path.isdir(os.path.join(self.path, "_delta_log"))
+
+    def _read(self) -> DataFrame:
+        from .sources.delta import read_delta
+
+        return read_delta(self.spark, self.path)
+
+    def _write(self, df: DataFrame, mode: str) -> None:
+        from .sources.delta import write_delta
+
+        write_delta(df, self.path, mode=mode)
+
+    def patch(self, rows: DataFrame, key: str, cond: Column, assignments: dict) -> None:
+        from .sources.delta import update_delta
+
+        # copy-on-write UPDATE: one commit rewrites ONLY the files
+        # holding matched rows; history stays readable via versionAsOf
+        update_delta(self.spark, self.path, cond, assignments)
+
+
+class _Iceberg(_OpenFormat):
+    """Iceberg v2 via :mod:`.sources.iceberg`."""
+
+    def exists(self) -> bool:
+        from .sources.iceberg import _metadata_versions
+
+        return bool(_metadata_versions(self.path))
+
+    def _read(self) -> DataFrame:
+        from .sources.iceberg import read_iceberg
+
+        return read_iceberg(self.spark, self.path)
+
+    def _write(self, df: DataFrame, mode: str) -> None:
+        from .sources.iceberg import write_iceberg
+
+        # an overwrite is a new snapshot referencing only the new
+        # manifest; prior snapshots stay time-travelable
+        write_iceberg(df, self.path, mode=mode)
+
+    def patch(self, rows: DataFrame, key: str, cond: Column, assignments: dict) -> None:
+        from .sources.iceberg import upsert_iceberg
+
+        # merge-on-read upsert in ONE snapshot: position-delete the
+        # key's rows + append their patched versions
+        upsert_iceberg(self.spark, self.path, _assign(rows, cond, assignments), on=[key])
+
+
+#: ``Catalog.backend`` value → table format
+FORMATS = {"txlog": _TxLog, "deltalog": _DeltaLog, "iceberg": _Iceberg}
+
 
 ENTITY_SCHEMA = StructType(
     [
@@ -169,44 +236,46 @@ AUDIT_SCHEMA = StructType(
         StructField("api_call_type", StringType(), True),
         StructField("modified_ts", TimestampType(), True),
         StructField("status", StringType(), True),
-        # which storage path actually served this call — "delta",
-        # "txlog", or "parquet" (VERDICT r3: correctness rows must
-        # show the non-fallback backend ran, not assume it)
+        # which table format served this call — "txlog", "deltalog"
+        # or "iceberg" — so correctness rows show the path that ran
         StructField("catalog_backend", StringType(), True),
     ]
 )
+
+
+def _present_ids(df: DataFrame, ids) -> set[int]:
+    """The ``ids`` that ``df`` holds — the one Spark job every CRUD
+    verb runs for its existence check."""
+    return {
+        r["entity_id"]
+        for r in df.filter(F.col("entity_id").isin(list(ids)))
+        .select("entity_id")
+        .collect()
+    }
 
 
 @dataclass
 class Catalog:
     """A warehouse-backed entity catalog with an audit log.
 
-    ``backend`` is chosen by :func:`delta_available` at construction:
-    ``"delta"`` stores tables as Delta Lake via delta-spark (mutations
-    are real ACID ``update``/``delete``/transactional overwrites);
-    ``"deltalog"`` stores tables in the SAME on-disk Delta format
-    through the dependency-free protocol implementation in
-    :mod:`..sources.delta` (append/overwrite commits on the public
-    ``_delta_log`` layout — a delta-spark reader can open the
-    warehouse, and vice versa); ``"txlog"`` (the default without
-    Delta) uses :class:`..txlog.TxLogTable` manifest commits — same
-    immutable-data + atomic-log-record protocol shape, private
-    format; ``"parquet"`` is the minimal read-modify-write directory
-    swap.  Callers never branch — the seam is this class."""
+    ``backend`` names the table format of every table this catalog
+    writes: ``"txlog"`` (default, :class:`..txlog.TxLogTable` manifest
+    commits), ``"deltalog"`` (the open Delta format — a delta-spark
+    reader can open the warehouse, and vice versa) or ``"iceberg"``
+    (Iceberg v2).  Callers never branch — the seam is this class, and
+    inside it the :data:`FORMATS` objects."""
 
     spark: SparkSession
     warehouse: str
-    backend: str = "auto"  # auto | txlog | parquet | delta | deltalog | iceberg
+    backend: str = "txlog"  # txlog | deltalog | iceberg
     config: "GlobalConfig | None" = None  # fm_prefix-scoped table names when set
     _audit_rows: list = field(default_factory=list)
 
     def __post_init__(self) -> None:
-        if self.backend == "auto":
-            self.backend = "delta" if delta_available(self.spark) else "txlog"
-        if self.backend not in (
-            "delta", "deltalog", "iceberg", "txlog", "parquet"
-        ):
-            raise ValueError(f"unknown backend: {self.backend}")
+        if self.backend not in FORMATS:
+            raise ValueError(
+                f"unknown backend: {self.backend!r} (expected one of {sorted(FORMATS)})"
+            )
 
     # ------------------------------------------------------------ paths
 
@@ -222,104 +291,15 @@ class Catalog:
             raise ValueError(f"unknown entity type: {entity_type}")
         return os.path.join(self.warehouse, self._name(entity_type))
 
-    # ------------------------------------------------------------ io
+    def _entities(self, entity_type: str):
+        return FORMATS[self.backend](self.spark, self._table_dir(entity_type))
 
-    def _is_table(self, d: str) -> bool:
-        if self.backend in ("delta", "deltalog"):
-            return os.path.isdir(os.path.join(d, "_delta_log"))
-        if self.backend == "iceberg":
-            from .sources.iceberg import _metadata_versions
-
-            return bool(_metadata_versions(d))
-        if self.backend == "txlog":
-            return TxLogTable(self.spark, d).exists()
-        return os.path.isdir(d) and any(f.endswith(".parquet") for f in os.listdir(d))
-
-    def _read_dir(self, d: str, schema: StructType) -> DataFrame:
-        if not self._is_table(d):
-            return self.spark.createDataFrame([], schema)
-        if self.backend == "delta":
-            return self.spark.read.format("delta").load(d)
-        if self.backend == "deltalog":
-            from .sources.delta import read_delta
-
-            return read_delta(self.spark, d)
-        if self.backend == "iceberg":
-            from .sources.iceberg import read_iceberg
-
-            return read_iceberg(self.spark, d)
-        if self.backend == "txlog":
-            return TxLogTable(self.spark, d).read(schema)
-        return self.spark.read.schema(schema).parquet(d)
+    def _events(self):
+        path = os.path.join(self.warehouse, self._name("api_events"))
+        return FORMATS[self.backend](self.spark, path)
 
     def load(self, entity_type: str) -> DataFrame:
-        return self._read_dir(self._table_dir(entity_type), ENTITY_SCHEMA)
-
-    def _overwrite(self, entity_type: str, df: DataFrame, op: str = "overwrite") -> None:
-        """Full-table replace.  Delta: a transactional overwrite commit
-        (readers see old or new, never a torn state).  Txlog: stage an
-        immutable data dir, publish a manifest commit (labelled with
-        the originating ``op`` so ``history()`` is an honest audit).
-        Parquet: write to a staging dir, then rename over the live dir
-        — atomic at the directory level on a POSIX filesystem."""
-        d = self._table_dir(entity_type)
-        if self.backend == "delta":
-            df.coalesce(1).write.format("delta").mode("overwrite").save(d)
-            return
-        if self.backend == "deltalog":
-            from .sources.delta import write_delta
-
-            # first write must be "error" so version 0 carries
-            # protocol+metaData; later overwrites tombstone in-commit.
-            # Safe to rewrite from a plan that reads this same table:
-            # data files are immutable (tombstoned, never deleted).
-            write_delta(
-                df.coalesce(1),
-                d,
-                mode="overwrite" if self._is_table(d) else "error",
-            )
-            return
-        if self.backend == "iceberg":
-            from .sources.iceberg import write_iceberg
-
-            # Iceberg overwrite = a new snapshot referencing only the
-            # new manifest; prior snapshots stay time-travelable
-            write_iceberg(
-                df.coalesce(1),
-                d,
-                mode="overwrite" if self._is_table(d) else "error",
-            )
-            return
-        if self.backend == "txlog":
-            TxLogTable(self.spark, d).overwrite(df, op=op)
-            return
-        staging = d + ".staging-" + uuid.uuid4().hex[:8]
-        df.coalesce(1).write.mode("overwrite").parquet(staging)
-        old = d + ".old-" + uuid.uuid4().hex[:8]
-        if os.path.isdir(d):
-            os.rename(d, old)
-        os.rename(staging, d)
-        if os.path.isdir(old):
-            shutil.rmtree(old, ignore_errors=True)
-
-    # ------------------------------------------------------------ delta mutations
-
-    def _delta_update(self, d: str, condition, assignments: dict) -> None:
-        """Real conditional UPDATE on a Delta table — the engine-native
-        form of the reference's DynamoDB ``ConditionExpression`` update
-        (source-system ``lambda_function.py:33-44``): only matched rows
-        change, in one ACID commit."""
-        from delta.tables import DeltaTable
-
-        DeltaTable.forPath(self.spark, d).update(
-            condition=condition,
-            set={k: F.lit(v) for k, v in assignments.items()},
-        )
-
-    def _delta_delete(self, d: str, condition) -> None:
-        from delta.tables import DeltaTable
-
-        DeltaTable.forPath(self.spark, d).delete(condition)
+        return self._entities(entity_type).read(ENTITY_SCHEMA)
 
     # ------------------------------------------------------------ audit (A1)
 
@@ -354,119 +334,39 @@ class Catalog:
         df = _local_df(self.spark, self._audit_rows, AUDIT_SCHEMA).withColumn(
             "modified_ts", F.current_timestamp()
         )
-        d = os.path.join(self.warehouse, self._name("api_events"))
-        if self.backend == "delta":
-            df.coalesce(1).write.format("delta").mode("append").save(d)
-        elif self.backend == "deltalog":
-            from .sources.delta import write_delta
-
-            write_delta(
-                df.coalesce(1),
-                d,
-                mode="append" if self._is_table(d) else "error",
-            )
-        elif self.backend == "iceberg":
-            from .sources.iceberg import write_iceberg
-
-            write_iceberg(
-                df.coalesce(1),
-                d,
-                mode="append" if self._is_table(d) else "error",
-            )
-        elif self.backend == "txlog":
-            TxLogTable(self.spark, d).append(df)
-        else:
-            df.coalesce(1).write.mode("append").parquet(d)
+        self._events().append(df)
         self._audit_rows = []
 
     def audit_log(self) -> DataFrame:
-        d = os.path.join(self.warehouse, self._name("api_events"))
-        pending = (
-            _local_df(self.spark, self._audit_rows, AUDIT_SCHEMA)
-            if self._audit_rows
-            else self.spark.createDataFrame([], AUDIT_SCHEMA)
-        )
-        if self._is_table(d):
-            return self._read_dir(d, AUDIT_SCHEMA).unionByName(pending)
-        return pending
+        pending = _local_df(self.spark, self._audit_rows, AUDIT_SCHEMA)
+        return self._events().read(AUDIT_SCHEMA).unionByName(pending)
 
     def update_event_status(self, request_id: str, method_name: str,
                             new_status: str) -> int:
         """A2: conditional point update — set status ONLY IF the
         (request_id, method_name) row exists; returns matched count.
         The reference's ``ConditionExpression`` semantics
-        (``lambda_function.py:34-44``) as a join-rewrite.  (In Delta:
-        ``MERGE … WHEN MATCHED THEN UPDATE`` with no NOT-MATCHED
-        branch.)"""
+        (``lambda_function.py:34-44``): ``MERGE … WHEN MATCHED THEN
+        UPDATE`` with no NOT-MATCHED branch.  On the flushed table the
+        patch costs O(matched), not O(table) — see each format's
+        ``patch``."""
         matched = 0
         for r in self._audit_rows:
             if r["aws_request_id"] == request_id and r["method_name"] == method_name:
                 r["status"] = new_status
                 matched += 1
-        d = os.path.join(self.warehouse, self._name("api_events"))
-        if self._is_table(d):
-            cond = (F.col("aws_request_id") == request_id) & (
-                F.col("method_name") == method_name
-            )
-            df = self._read_dir(d, AUDIT_SCHEMA)
+        events = self._events()
+        if events.exists():
+            key = F.col("aws_request_id") == request_id
+            cond = key & (F.col("method_name") == method_name)
+            df = events.read(AUDIT_SCHEMA)
             hit = df.filter(cond).count()
             if hit:
-                if self.backend == "delta":
-                    self._delta_update(d, cond, {"status": new_status})
-                elif self.backend == "deltalog":
-                    from .sources.delta import update_delta
-
-                    # copy-on-write UPDATE: one commit rewrites ONLY
-                    # the files holding matched rows — O(files-with-
-                    # matches) where the audit table is unbounded, so
-                    # a snapshot rewrite would be O(table) per point
-                    # update (VERDICT r5).  History stays readable via
-                    # versionAsOf.
-                    update_delta(self.spark, d, cond, {"status": new_status})
-                elif self.backend == "iceberg":
-                    from .sources.iceberg import upsert_iceberg
-
-                    # merge-on-read upsert in ONE snapshot: position-
-                    # delete the touched request_id's rows + append
-                    # their patched versions — no data file rewritten,
-                    # same contract as the txlog path below
-                    key = F.col("aws_request_id") == request_id
-                    patch = df.filter(key).withColumn(
-                        "status",
-                        F.when(cond, F.lit(new_status)).otherwise(F.col("status")),
-                    )
-                    upsert_iceberg(
-                        self.spark, d, patch, on=["aws_request_id"]
-                    )
-                elif self.backend == "txlog":
-                    # merge-on-read point update in ONE atomic commit:
-                    # tombstone the touched request_id in existing
-                    # dirs + append its patched rows — no data dir is
-                    # rewritten.  The patch must carry EVERY row of
-                    # the key it tombstones (the condition also checks
-                    # method_name, so sibling rows ride along
-                    # unchanged).
-                    key = F.col("aws_request_id") == request_id
-                    patch = df.filter(key).withColumn(
-                        "status",
-                        F.when(cond, F.lit(new_status)).otherwise(F.col("status")),
-                    )
-                    TxLogTable(self.spark, d).upsert_keys(
-                        patch, "aws_request_id", op="update"
-                    )
-                else:
-                    # legacy minimal mode: read-modify-write directory
-                    # swap, full rewrite by design
-                    updated = df.withColumn(
-                        "status",
-                        F.when(cond, F.lit(new_status)).otherwise(F.col("status")),
-                    )
-                    staging = d + ".staging-" + uuid.uuid4().hex[:8]
-                    updated.coalesce(1).write.mode("overwrite").parquet(staging)
-                    old = d + ".old-" + uuid.uuid4().hex[:8]
-                    os.rename(d, old)
-                    os.rename(staging, d)
-                    shutil.rmtree(old, ignore_errors=True)
+                # the key's sibling rows (other method_name) ride along
+                # unchanged: the merge-on-read formats replace the
+                # whole key
+                events.patch(df.filter(key), "aws_request_id", cond,
+                             {"status": new_status})
                 matched += hit
         return matched
 
@@ -474,45 +374,34 @@ class Catalog:
 
     def create(self, entity_type: str, entity_id: int, name: str,
                attrs: str | None = None) -> dict:
-        """A6: register an entity; also provisions its storage prefix —
-        the engine's analogue of the per-source-system bucket
-        (``cft/sourceSystem.yaml:20-27``)."""
-        existing = self.load(entity_type)
-        if existing.filter(F.col("entity_id") == entity_id).count() > 0:
-            self._audit(f"{entity_type}/create", attrs, status="failure")
+        """A6: register one entity — the one-row case of
+        :meth:`create_many`; 409 when the id exists."""
+        res = self.create_many(entity_type, [(entity_id, name, attrs)])
+        if res["conflicts"]:
             return {"statusCode": 409, "body": f"{entity_type} {entity_id} exists"}
-        row = _local_df(
-            self.spark, [(entity_id, name, attrs, "active")], ENTITY_SCHEMA
-        )
-        self._overwrite(entity_type, existing.unionByName(row), op="create")
-        if entity_type == "source_system":
-            os.makedirs(
-                os.path.join(self.warehouse, "lake", str(entity_id), "init"),
-                exist_ok=True,
-            )
-        self._audit(f"{entity_type}/create", attrs)
         return {"statusCode": 200, "body": f"{entity_type} {entity_id} created"}
 
     def create_many(self, entity_type: str, rows: list[tuple[int, str, str | None]]) -> dict:
-        """Batch registration: one validation pass + ONE table write
-        for N entities (the per-call path would be N full
-        read-modify-write cycles — at catalog scale that's latency,
-        not correctness, but bulk onboarding is a real API).  Audit
-        still records one row per entity, like N reference calls."""
+        """Register entities in one validation pass + ONE table write;
+        also provisions each source system's storage prefix — the
+        engine's analogue of the per-source-system bucket
+        (``cft/sourceSystem.yaml:20-27``).  An id already in the table,
+        or repeated within ``rows``, is a conflict: the first copy
+        wins and every later copy is refused.  Audit records one row
+        per requested entity, like N reference calls."""
         existing = self.load(entity_type)
-        new_ids = {r[0] for r in rows}
-        dups = {
-            r["entity_id"]
-            for r in existing.filter(F.col("entity_id").isin(list(new_ids)))
-            .select("entity_id")
-            .collect()
-        }
-        fresh = [r for r in rows if r[0] not in dups]
+        taken = _present_ids(existing, {r[0] for r in rows})
+        fresh, conflicts = [], []
+        for r in rows:
+            (conflicts if r[0] in taken else fresh).append(r)
+            taken.add(r[0])
         if fresh:
             batch = _local_df(
                 self.spark, [(i, n, a, "active") for i, n, a in fresh], ENTITY_SCHEMA
             )
-            self._overwrite(entity_type, existing.unionByName(batch), op="create")
+            self._entities(entity_type).overwrite(
+                existing.unionByName(batch), op="create"
+            )
         for i, _, a in fresh:
             self._audit(f"{entity_type}/create", a)
             if entity_type == "source_system":
@@ -520,61 +409,9 @@ class Catalog:
                     os.path.join(self.warehouse, "lake", str(i), "init"),
                     exist_ok=True,
                 )
-        for r in rows:
-            if r[0] in dups:
-                self._audit(f"{entity_type}/create", r[2], status="failure")
-        return {"statusCode": 200, "created": len(fresh), "conflicts": len(dups)}
-
-    def update_where(self, entity_type: str, entity_ids: list[int], *,
-                     status: str | None = None, name: str | None = None) -> dict:
-        """Batch conditional update: one write for N ids; ids that
-        don't exist are reported unmatched and NOT created (A2)."""
-        existing = self.load(entity_type)
-        matched_ids = {
-            r["entity_id"]
-            for r in existing.filter(F.col("entity_id").isin(entity_ids))
-            .select("entity_id")
-            .collect()
-        }
-        if matched_ids:
-            hit = F.col("entity_id").isin(list(matched_ids))
-            updated = existing
-            for col, val in (("name", name), ("status", status)):
-                if val is not None:
-                    updated = updated.withColumn(
-                        col, F.when(hit, F.lit(val)).otherwise(F.col(col))
-                    )
-            self._overwrite(entity_type, updated, op="update")
-        for i in entity_ids:
-            self._audit(
-                f"{entity_type}/update",
-                str(i),
-                status="success" if i in matched_ids else "failure",
-            )
-        return {"statusCode": 200, "matched": len(matched_ids),
-                "unmatched": len(set(entity_ids) - matched_ids)}
-
-    def delete_where(self, entity_type: str, entity_ids: list[int]) -> dict:
-        """Batch deregistration (anti-join rewrite), one write."""
-        existing = self.load(entity_type)
-        matched = {
-            r["entity_id"]
-            for r in existing.filter(F.col("entity_id").isin(entity_ids))
-            .select("entity_id")
-            .collect()
-        }
-        self._overwrite(
-            entity_type,
-            existing.filter(~F.col("entity_id").isin(entity_ids)),
-            op="delete",
-        )
-        for i in entity_ids:
-            self._audit(
-                f"{entity_type}/delete",
-                str(i),
-                status="success" if i in matched else "failure",
-            )
-        return {"statusCode": 200, "matched": len(matched)}
+        for _, _, a in conflicts:
+            self._audit(f"{entity_type}/create", a, status="failure")
+        return {"statusCode": 200, "created": len(fresh), "conflicts": len(conflicts)}
 
     def read(self, entity_type: str, entity_id: int) -> DataFrame:
         """A7: point lookup (predicate pushdown reaches the parquet
@@ -585,37 +422,57 @@ class Catalog:
 
     def update(self, entity_type: str, entity_id: int, *, name: str | None = None,
                attrs: str | None = None, status: str | None = None) -> dict:
-        """A8: conditional update — mutate ONLY IF the id exists (A2
-        semantics applied to entities); a missing id reports
-        matched=0 and writes nothing."""
+        """A8: conditional update of one id — the one-id case of
+        :meth:`update_where`; 404 with matched=0 when it is missing."""
+        matched = self.update_where(
+            entity_type, [entity_id], name=name, attrs=attrs, status=status
+        )["matched"]
+        return {"statusCode": 200 if matched else 404, "matched": matched}
+
+    def update_where(self, entity_type: str, entity_ids: list[int], *,
+                     name: str | None = None, attrs: str | None = None,
+                     status: str | None = None) -> dict:
+        """Conditional update (A2 semantics applied to entities): one
+        write for N ids; ids that don't exist are reported unmatched
+        and NOT created, and when none match nothing is written."""
         existing = self.load(entity_type)
-        matched = existing.filter(F.col("entity_id") == entity_id).count()
-        if matched == 0:
-            self._audit(f"{entity_type}/update", str(entity_id), status="failure")
-            return {"statusCode": 404, "matched": 0}
-        hit = F.col("entity_id") == entity_id
-        updated = existing
-        for col, val in (("name", name), ("attrs", attrs), ("status", status)):
-            if val is not None:
-                updated = updated.withColumn(
-                    col, F.when(hit, F.lit(val)).otherwise(F.col(col))
-                )
-        self._overwrite(entity_type, updated, op="update")
-        self._audit(f"{entity_type}/update", str(entity_id))
-        return {"statusCode": 200, "matched": matched}
+        matched = _present_ids(existing, entity_ids)
+        if matched:
+            sets = {c: v for c, v in (("name", name), ("attrs", attrs),
+                                      ("status", status)) if v is not None}
+            hit = F.col("entity_id").isin(list(matched))
+            self._entities(entity_type).overwrite(
+                _assign(existing, hit, sets), op="update"
+            )
+        for i in entity_ids:
+            self._audit(
+                f"{entity_type}/update",
+                str(i),
+                status="success" if i in matched else "failure",
+            )
+        return {"statusCode": 200, "matched": len(matched),
+                "unmatched": len(set(entity_ids) - matched)}
 
     def delete(self, entity_type: str, entity_id: int) -> dict:
-        """A9: deregister — anti-join rewrite of ``DELETE FROM``."""
-        existing = self.load(entity_type)
-        matched = existing.filter(F.col("entity_id") == entity_id).count()
-        self._overwrite(
-            entity_type,
-            existing.filter(F.col("entity_id") != entity_id),
-            op="delete",
-        )
-        self._audit(
-            f"{entity_type}/delete",
-            str(entity_id),
-            status="success" if matched else "failure",
-        )
+        """A9: deregister one id — the one-id case of
+        :meth:`delete_where`; 404 with matched=0 when it is missing."""
+        matched = self.delete_where(entity_type, [entity_id])["matched"]
         return {"statusCode": 200 if matched else 404, "matched": matched}
+
+    def delete_where(self, entity_type: str, entity_ids: list[int]) -> dict:
+        """Deregistration (anti-join rewrite of ``DELETE FROM``), one
+        write for N ids; when none match nothing is written."""
+        existing = self.load(entity_type)
+        matched = _present_ids(existing, entity_ids)
+        if matched:
+            self._entities(entity_type).overwrite(
+                existing.filter(~F.col("entity_id").isin(list(matched))),
+                op="delete",
+            )
+        for i in entity_ids:
+            self._audit(
+                f"{entity_type}/delete",
+                str(i),
+                status="success" if i in matched else "failure",
+            )
+        return {"statusCode": 200, "matched": len(matched)}

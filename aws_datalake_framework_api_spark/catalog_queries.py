@@ -17,7 +17,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .catalog import Catalog, _session_key
+from .catalog import Catalog
 from .registry import query
 from .sources.readers import load_table
 
@@ -28,6 +28,16 @@ from .sources.readers import load_table
 # Keyed on applicationId+startTime, not id(spark): a GC'd session's
 # id() can be reused and would inherit a stale template (ADVICE r2).
 _TEMPLATE_WH: dict[tuple[tuple[str, int], str], str] = {}
+
+
+def _session_key(spark: SparkSession) -> tuple[str, int]:
+    """Stable per-SparkContext memo key.  ``id(spark)`` is unsafe: a
+    garbage-collected session's id can be REUSED by a new session,
+    silently inheriting the stale memo entry (ADVICE r2).
+    applicationId + startTime survive the Python wrapper's lifetime
+    and never collide across contexts."""
+    sc = spark.sparkContext
+    return (sc.applicationId, sc.startTime)
 
 
 def _tracked_mkdtemp(prefix: str) -> str:
@@ -203,9 +213,11 @@ def event_update(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The output carries ``catalog_backend`` and the oracle pins it to
     ``'txlog'`` (VERDICT r3 item #5): the green row proves the update
-    ran through the transaction-log commit protocol, not the plain
-    directory swap.  If Delta ever lands in the image, the auto-probe
-    flips the backend and this row goes red — the signal to re-pin."""
+    ran through the catalog's default format, the transaction-log
+    commit protocol.  The default is a fixed choice among the three
+    formats (txlog, deltalog, iceberg), not a probe of the image, so
+    this row only goes red if that default is changed on purpose —
+    the signal to re-pin."""
     cat = Catalog(spark, tempfile.mkdtemp(prefix="spark_graft_wh_"))
     cat._audit("source_system/create", None, request_id="req-0")
     cat._audit("source_system/create", None, request_id="req-1")

@@ -6,10 +6,10 @@ BASELINE names "Spark SQL + Delta/Iceberg connectors" as the
 approach); the engine's own ACID catalog backend (``txlog.py``)
 implements the Delta FEATURE SET over a private manifest format, but
 a user arriving from a lakehouse needs to point the engine at an
-EXISTING Delta table.  ``delta-spark`` is auto-used when installed
-(``catalog.delta_available``); this module is the fallback that works
-from the PUBLIC PROTOCOL alone — the Delta transaction-log layout
-documented in delta-io/delta's PROTOCOL.md:
+EXISTING Delta table.  ``delta-spark`` is not installed and nothing
+here probes for it: this module works from the PUBLIC PROTOCOL alone
+(it is also the catalog's ``deltalog`` format) — the Delta
+transaction-log layout documented in delta-io/delta's PROTOCOL.md:
 
 - a table is a directory of parquet data files plus ``_delta_log/``
   holding ``%020d.json`` commits, each a newline-delimited list of
@@ -5167,7 +5167,7 @@ def clone_delta(spark: SparkSession, src: str, dst: str) -> int:
     table-root-relative (``u``) to absolute (``p``) storage so they
     keep resolving from the clone's root.
 
-    Two protocol-documented caveats, both inherited from delta-spark:
+    Two protocol-documented caveats, both shared with delta-spark:
     ``vacuum_delta`` on the clone only walks the clone directory, so
     referenced source bytes are never reclaimed by the clone (correct
     — it doesn't own them); and vacuuming the SOURCE can delete files

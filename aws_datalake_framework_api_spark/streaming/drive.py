@@ -25,10 +25,13 @@ unchanged.
 
 from __future__ import annotations
 
+import logging
 import time
 from typing import Callable
 
 from pyspark.sql.streaming import StreamingQuery
+
+_log = logging.getLogger(__name__)
 
 #: Error-text signature of the transient worker-spawn timeout.  Kept
 #: deliberately narrow: a real source/sink bug must still fail loudly
@@ -51,15 +54,24 @@ def run_stream_to_completion(
 ) -> None:
     """Start the stream via ``start()`` and await termination,
     restarting (same checkpoint, so committed batches are skipped) on
-    the transient Python-worker spawn timeout only."""
+    the transient Python-worker spawn timeout only — whether it is
+    raised by ``start()`` itself or while awaiting termination.  Each
+    restart logs one warning line."""
+    if attempts < 1:
+        raise ValueError(f"attempts must be >= 1, got {attempts}")
     for attempt in range(attempts):
-        q = start()
         try:
-            q.awaitTermination()
+            start().awaitTermination()
             return
         except Exception as exc:  # noqa: BLE001 — filtered below
             if not _is_transient(exc) or attempt == attempts - 1:
                 raise
+            _log.warning(
+                "stream attempt %d/%d hit the Python-worker spawn timeout; "
+                "restarting from the checkpoint",
+                attempt + 1,
+                attempts,
+            )
             # brief backoff: the spawn timed out because the box was
             # momentarily saturated; give it a beat before re-forking
             time.sleep(1.0 + attempt)

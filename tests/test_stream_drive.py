@@ -66,3 +66,35 @@ def test_persistent_transient_failure_raises_after_budget(monkeypatch):
     with pytest.raises(RuntimeError, match="failed to connect back"):
         run_stream_to_completion(_starter(errs, log))
     assert log == ["start"] * 3  # bounded: 1 original + 2 retries
+
+
+def test_transient_failure_in_start_is_retried(monkeypatch, caplog):
+    """The spawn timeout can surface while ``start()`` launches the
+    query (PythonStreamingSourceRunner.init), not only while awaiting
+    it: that throw gets the same bounded retry, with one warning line
+    per restart."""
+    monkeypatch.setattr(
+        "aws_datalake_framework_api_spark.streaming.drive.time.sleep",
+        lambda _s: None,
+    )
+    log = []
+
+    def start():
+        log.append("start")
+        if len(log) == 1:
+            raise RuntimeError(_TRANSIENT_MSG)
+        return _Query()
+
+    with caplog.at_level(
+        "WARNING", logger="aws_datalake_framework_api_spark.streaming.drive"
+    ):
+        run_stream_to_completion(start)
+    assert log == ["start", "start"]
+    assert len(caplog.records) == 1 and "attempt 1/3" in caplog.messages[0]
+
+
+def test_zero_attempts_is_rejected():
+    log = []
+    with pytest.raises(ValueError, match="attempts"):
+        run_stream_to_completion(_starter([None], log), attempts=0)
+    assert log == []  # never started

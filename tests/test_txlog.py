@@ -92,7 +92,8 @@ def test_commit_race_loser_rebases(spark, table):
 def test_catalog_txlog_mutations_have_honest_history(spark, tmp_path):
     """The catalog's A6/A8/A9 flow over txlog: each mutation is one
     commit, op labels match the API calls, and the conditional-update
-    no-op (A2/A8 attribute_exists semantics) commits NOTHING."""
+    and delete no-ops (A2/A8 attribute_exists semantics) commit
+    NOTHING."""
     cat = Catalog(spark, str(tmp_path / "wh"), backend="txlog")
     cat.create("source_system", 1, "alpha")
     cat.create("source_system", 2, "beta")
@@ -105,6 +106,10 @@ def test_catalog_txlog_mutations_have_honest_history(spark, tmp_path):
     t = TxLogTable(spark, os.path.join(str(tmp_path / "wh"), "source_system"))
     assert t.versions() == versions_before  # no-op committed nothing
     cat.delete("source_system", 2)
+    versions_before = t.versions()
+    res = cat.delete("source_system", 999)  # no match
+    assert res["statusCode"] == 404 and res["matched"] == 0
+    assert t.versions() == versions_before  # a missed delete commits nothing
     assert [h["op"] for h in t.history()] == ["create", "create", "update", "delete"]
     rows = {r["entity_id"]: r["status"] for r in cat.load("source_system").collect()}
     assert rows == {1: "suspended"}
